@@ -22,10 +22,18 @@ import org.apache.spark.sql.functions._
   * never duplicates it, because extraction is deterministic and a group is
   * rewritten wholesale.
   *
+  * Each group is one routed extraction of its slice
+  * (`ExtractJob.extractWithLineageCached`): normal docs stay in the slice's
+  * input partitions, only giants are exchanged, the kernel output is
+  * persisted once and feeds both the spans write and the map-side lineage
+  * summary — no shuffle of normal docs and no aggregation exchange.
+  *
   * At cluster scale each group is itself a full distributed job over 1/G of
   * the input, so checkpoint granularity trades straggler re-work (small G)
   * against commit overhead (large G); G≈#(Iceberg partitions touched) in a
-  * real deployment.
+  * real deployment. G is PINNED per outDir ([[pinNumGroups]]): a different
+  * G rehashes every doc, so the committed groups would no longer be the
+  * same docs and some would never be written.
   */
 object Checkpoint {
 
@@ -91,9 +99,39 @@ object Checkpoint {
       outDir: String,
       cfg: ExtractJob.Config = ExtractJob.Config(),
       numGroups: Int = 8,
-      maxGroups: Int = Int.MaxValue): Int =
-    runResumable(docs, new ParquetSpanWriter(docs.sparkSession, outDir),
-      cfg, numGroups, maxGroups)
+      maxGroups: Int = Int.MaxValue): Int = {
+    val writer = new ParquetSpanWriter(docs.sparkSession, outDir)
+    pinNumGroups(docs.sparkSession, outDir, numGroups, writer)
+    runResumable(docs, writer, cfg, numGroups, maxGroups)
+  }
+
+  private def requireGroups(numGroups: Int): Unit =
+    require(numGroups >= 1, s"numGroups must be at least 1, got $numGroups")
+
+  /** Enforce the per-outDir `numGroups` pin (`_groups` marker), written
+    * before the first group commits. Resuming with a different value would
+    * treat the committed groups as done under the NEW hash, and the docs
+    * that moved into them would never be written — so a mismatch fails,
+    * naming the pinned value. Without a marker (fresh or legacy outDir),
+    * a committed group id ≥ `numGroups` already proves the value wrong.
+    */
+  def pinNumGroups(spark: SparkSession, outDir: String, numGroups: Int,
+      writer: SpanWriter): Unit = {
+    requireGroups(numGroups)
+    val marker = new org.apache.hadoop.fs.Path(s"$outDir/_groups")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.util.Markers.read(fs, marker).flatMap(_.toIntOption) match {
+      case Some(pinned) =>
+        require(pinned == numGroups,
+          s"outDir $outDir was written with numGroups=$pinned; resuming with " +
+            s"$numGroups would skip docs — pass $pinned (or a fresh outDir)")
+      case None =>
+        val beyond = writer.doneGroups().filter(_ >= numGroups)
+        require(beyond.isEmpty, s"outDir $outDir holds committed group ${beyond.max}, " +
+          s"beyond numGroups=$numGroups — pass the numGroups it was written with")
+        graft.util.Markers.write(fs, marker, numGroups.toString)
+    }
+  }
 
   /** Run (or resume) an extraction against an arbitrary [[SpanWriter]]. */
   def runResumable(
@@ -102,6 +140,7 @@ object Checkpoint {
       cfg: ExtractJob.Config,
       numGroups: Int,
       maxGroups: Int): Int = {
+    requireGroups(numGroups)
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -121,7 +160,8 @@ object Checkpoint {
       // empty groups durably "done" (otherwise every resume re-runs them).
       val marker = spark.createDataset(Seq(
         graft.model.Lineage(-1, 0L, 0L, 0L, "marker")))
-      writer.commitGroup(g, lineage.union(marker).toDF())
+      // one lineage file per group, not one per kernel partition
+      writer.commitGroup(g, lineage.union(marker).coalesce(1).toDF())
       unpersist()
     }
     todo.size

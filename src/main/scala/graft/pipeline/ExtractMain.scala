@@ -16,15 +16,38 @@ import org.apache.spark.sql.SparkSession
   * summary. Re-running after a kill resumes from the last committed group.
   */
 object ExtractMain {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExtractMain <inputSfDir> <outDir> [mode] [numGroups]")
-    val Array(inDir, outDir) = args.take(2)
+  private val Usage =
+    "usage: ExtractMain <inputSfDir> <outDir> [chunk|paragraph|semantic] [numGroups] [parquet|jsonl]"
+
+  /** Parsed command line; every bad argument fails here, before a Spark
+    * session exists. */
+  private[pipeline] final case class Args(
+      inDir: String, outDir: String, mode: ExtractMode, numGroups: Int, backend: String)
+
+  private[pipeline] def parseArgs(args: Array[String]): Args = {
+    require(args.length >= 2 && args.length <= 5, Usage)
     val mode = args.lift(2).getOrElse("chunk") match {
+      case "chunk"     => ExtractMode.ChunkMode
       case "paragraph" => ExtractMode.ParagraphMode
       case "semantic"  => ExtractMode.SemanticMode
-      case _           => ExtractMode.ChunkMode
+      case other =>
+        throw new IllegalArgumentException(s"unknown mode '$other' — expected chunk, paragraph or semantic")
     }
-    val numGroups = args.lift(3).map(_.toInt).getOrElse(8)
+    val numGroups = args.lift(3).fold(8) { s =>
+      s.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(s"numGroups must be an integer >= 1, got '$s'"))
+    }
+    // Storage backend for the group-committed checkpoint: parquet (dynamic
+    // partition-overwrite) or jsonl (explicit staging+rename protocol) —
+    // both pass the SpanWriterContractSpec behavioral contract.
+    val backend = args.lift(4).getOrElse("parquet")
+    require(backend == "parquet" || backend == "jsonl",
+      s"unknown writer backend '$backend' — expected parquet or jsonl")
+    Args(args(0), args(1), mode, numGroups, backend)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Args(inDir, outDir, mode, numGroups, backend) = parseArgs(args)
 
     // spark-submit provides master/conf; default local[*] for bare runs.
     val spark = SparkSession.builder()
@@ -36,16 +59,10 @@ object ExtractMain {
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = DocSynth.docs(spark, inDir)
-    // Storage backend for the group-committed checkpoint: parquet (dynamic
-    // partition-overwrite) or jsonl (explicit staging+rename protocol) —
-    // both pass the SpanWriterContractSpec behavioral contract. The backend
-    // is PINNED per outDir via a `_writer` marker: resuming a parquet run
-    // with the jsonl reader (or vice versa) would misparse the lineage and
-    // silently mix formats, so a mismatch — or a typo'd backend name —
-    // fails fast instead.
-    val backend = args.lift(4).getOrElse("parquet")
-    require(backend == "parquet" || backend == "jsonl",
-      s"unknown writer backend '$backend' — expected parquet or jsonl")
+    // The backend is PINNED per outDir via a `_writer` marker: resuming a
+    // parquet run with the jsonl reader (or vice versa) would misparse the
+    // lineage and silently mix formats, so a mismatch fails fast instead.
+    // numGroups is pinned the same way (Checkpoint.pinNumGroups).
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     resolveBackendPin(fs, outDir, backend)
@@ -57,6 +74,7 @@ object ExtractMain {
         (new Checkpoint.ParquetSpanWriter(spark, outDir),
           () => Checkpoint.readLineage(spark, outDir))
     }
+    Checkpoint.pinNumGroups(spark, outDir, numGroups, writer)
     runAndReport(spark, docs, writer, readLineage, mode, numGroups)
     spark.stop()
   }

@@ -47,8 +47,8 @@ object DumpPlans {
     // flagship extraction pipeline
     // AQE off for this dump so the static ReuseExchange is visible in the
     // printed plan (with AQE on, the same reuse happens at runtime and the
-    // pre-execution explain shows the un-reused initial plan — see
-    // ProbeExtractPlan for the final-adaptive-plan evidence)
+    // pre-execution explain shows the un-reused initial plan; PlanQualitySpec
+    // "extractFromRaw: ONE input scan" gates the property)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val ext = graft.pipeline.ExtractJob.extractFromRaw(spark, sfDir, replicate = 2)
     sb ++= "\n## extraction pipeline (extractFromRaw, replicated corpus — the sustained-bench shape)\n\n"

@@ -146,7 +146,7 @@ class PlanQualitySpec extends SparkTestBase {
     * a second scan of the input. Fused path: both branches hang off the
     * same canonical base exchange, so the second branch compiles to a
     * ReusedExchange (verified here with static reuse; AQE's runtime stage
-    * reuse does the same in adaptive runs — see ProbeExtractPlan).
+    * reuse does the same in adaptive runs).
     */
   test("extractFromRaw: ONE input scan — giants branch reuses the base exchange") {
     withStaticReuse {
@@ -174,6 +174,52 @@ class PlanQualitySpec extends SparkTestBase {
       .toDF().queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters: [Or(LessThanOrEqual(n_chars,"), p.take(4000))
     assert(p.contains("GreaterThan(n_chars,"), p.take(4000))
+  }
+
+  /** The deployed per-group shape (Checkpoint → extractWithLineageCached):
+    * normal docs keep their k input partitions; the one hash exchange is the
+    * giants branch's, at default parallelism — never the session's shuffle
+    * partition count (200 under ExtractMain).
+    */
+  test("extractWithLineageCached: k + defaultParallelism partitions, one exchange, giants only") {
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThan, Literal}
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import spark.implicits._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try {
+      val k = 3
+      val in = graft.sources.DocSynth.docs(spark, sfDir).collect().toSeq
+      val docs = spark.createDataset(spark.sparkContext.parallelize(in, k))
+      val (spans, _, unpersist) = graft.pipeline.ExtractJob.extractWithLineageCached(docs)
+      try {
+        val plan = spans.queryExecution.executedPlan
+        val exchanges = nodes(plan).collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.size == 1, plan.toString.take(4000))
+        assert(exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning], plan.toString.take(4000))
+        val giantsFilter = nodes(exchanges.head.child).exists {
+          case f: FilterExec => f.condition.exists {
+            case GreaterThan(_, Literal(v, _)) => v == 1024L
+            case _ => false
+          }
+          case _ => false
+        }
+        assert(giantsFilter, plan.toString.take(4000))
+        val parts = spans.rdd.getNumPartitions
+        assert(parts <= k + spark.sparkContext.defaultParallelism, s"$parts output partitions")
+      } finally unpersist()
+    } finally spark.conf.set(key, prev)
   }
 
   test("q_asof_join: one-pass merge - single user_id exchange, no join node") {

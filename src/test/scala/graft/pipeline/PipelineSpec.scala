@@ -249,6 +249,86 @@ class PipelineSpec extends SparkTestBase {
     assert(Checkpoint.readLineage(spark, dirA).select("grp").distinct().count() == 8)
   }
 
+  test("resume: numGroups is pinned per outDir, a different value fails naming the pin") {
+    val docs = DocSynth.docs(spark, sfDir)
+    val dir = Files.createTempDirectory("graft-resume-pin").toString
+    assert(Checkpoint.runResumable(docs, dir, numGroups = 8, maxGroups = 3) == 3)
+    // under G=4 the done groups {0,1,2} would hold other docs: every doc
+    // with hash mod 8 in {4,5,6} would never be written
+    val e = intercept[IllegalArgumentException] {
+      Checkpoint.runResumable(docs, dir, numGroups = 4)
+    }
+    assert(e.getMessage.contains("numGroups=8"), e.getMessage)
+    assert(Checkpoint.runResumable(docs, dir, numGroups = 8) == 5)
+    assert(Checkpoint.readSpans(spark, dir).count() == 500)
+    intercept[IllegalArgumentException] {
+      Checkpoint.runResumable(docs, Files.createTempDirectory("graft-g0").toString, numGroups = 0)
+    }
+  }
+
+  test("ExtractMain: bad arguments fail before any work") {
+    val ok = ExtractMain.parseArgs(Array("in", "out", "semantic", "4", "jsonl"))
+    assert(ok == ExtractMain.Args("in", "out", ExtractMode.SemanticMode, 4, "jsonl"))
+    assert(ExtractMain.parseArgs(Array("in", "out")) ==
+      ExtractMain.Args("in", "out", ExtractMode.ChunkMode, 8, "parquet"))
+    for ((bad, named) <- Seq(
+        Array("in") -> "[parquet|jsonl]",
+        Array("in", "out", "semantc") -> "'semantc'",
+        Array("in", "out", "chunk", "0") -> "'0'",
+        Array("in", "out", "chunk", "eight") -> "'eight'",
+        Array("in", "out", "chunk", "8", "iceberg") -> "'iceberg'")) {
+      val e = intercept[IllegalArgumentException](ExtractMain.parseArgs(bad))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+  }
+
+  test("routing: any partitioning and threshold gives each doc's own kernel output") {
+    import org.apache.spark.sql.functions.spark_partition_id
+    val in = DocSynth.docs(spark, sfDir).collect().toSeq
+    val want = in.map(d => d.doc_id -> graft.kernel.Extract.extractDoc(d)).toMap
+    assert(in.exists(_.spans.map(_.text.length).sum > 1024)) // both branches populated
+    for (k <- Seq(1, 3, 8); t <- Seq(0L, 1024L, Long.MaxValue)) {
+      val docs = spark.createDataset(spark.sparkContext.parallelize(in, k))
+      val cfg = ExtractJob.Config(giantMinChars = t)
+      val (spans, lineage, unpersist) = ExtractJob.extractWithLineageCached(docs, cfg)
+      val out = spans.collect()
+      val lin = lineage.collect()
+      val parts = spans.toDF().select(spark_partition_id()).distinct().count()
+      unpersist()
+      val at = s"k=$k giantMinChars=$t"
+      assert(out.length == in.length && out.forall(d => want(d.doc_id) == d), at)
+      assert(lin.map(_.docs_parsed).sum == in.length, at)
+      assert(lin.map(_.spans_emitted).sum == out.map(_.spans.size.toLong).sum, at)
+      assert(lin.map(_.partition_id).distinct.length == lin.length, at)
+      assert(lin.length == parts, at) // one row per non-empty partition
+      assert(collectSorted(ExtractJob.extract(docs, cfg)) == out.sortBy(_.doc_id).toSeq, at)
+    }
+  }
+
+  test("lineage: a doc whose kernel throws is counted and emitted empty, and its group commits") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val bad = Doc("bad", Seq(Span("text", null, "", 0))) // NULL text: the kernel throws
+    assert(scala.util.Try(graft.kernel.Extract.extractDoc(bad)).isFailure)
+    val in = bad +: DocSynth.docs(spark, sfDir).limit(20).collect().toSeq
+    val docs = spark.createDataset(spark.sparkContext.parallelize(in, 3))
+    val (spans, lineage, unpersist) = ExtractJob.extractWithLineageCached(docs)
+    assert(spans.collect().find(_.doc_id == "bad").contains(Doc("bad", Nil)))
+    val badPart = spans.toDF().where(col("doc_id") === "bad")
+      .select(spark_partition_id()).head().getInt(0)
+    val lin = lineage.collect()
+    unpersist()
+    assert(lin.map(_.docs_parsed).sum == in.length)
+    assert(lin.filter(_.parse_failures > 0).map(l => l.partition_id -> l.parse_failures).toSeq ==
+      Seq(badPart -> 1L))
+
+    val dir = Files.createTempDirectory("graft-resume-failure").toString
+    assert(Checkpoint.runResumable(docs, dir, numGroups = 1) == 1)
+    val real = Checkpoint.readLineage(spark, dir).where($"status" === "complete")
+    assert(real.agg(org.apache.spark.sql.functions.sum($"parse_failures")).head.getLong(0) == 1L)
+    assert(Checkpoint.readSpans(spark, dir).as[Doc].collect().find(_.doc_id == "bad")
+      .contains(Doc("bad", Nil)))
+  }
+
   test("resume through JsonlSpanWriter converges to the parquet writer's output") {
     val docs = DocSynth.docs(spark, sfDir)
     val dirJ = Files.createTempDirectory("graft-resume-jsonl").toString
