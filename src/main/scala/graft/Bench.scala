@@ -250,16 +250,19 @@ object Bench {
     val loadBefore = loadavg1m
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val sec = try (1 to qreps).map(_ => timeSec(force(fn(spark, sfDir)))).min
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1.0 }
       name -> sec
     }
+    // a failed query is -1.0 in "queries" and left out of "total", which
+    // LOWERS the headline: name the failures so no reader misses them
+    val failed = results.collect { case (name, sec) if sec < 0 => "\"" + name + "\"" }
     val loadAfter = loadavg1m
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum + chunkSec + semSec
     // extract_* fields from the pinned child; the embedded "extract_detail"
     // object carries its per-rep times / GC / loadavg / heap fingerprint
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","extraction_sec":$chunkSec%.3f,"extraction_docs_per_sec":$docsPerSec%.1f,"semantic_extraction_sec":$semSec%.3f,"semantic_docs_per_sec":$semDocsPerSec%.1f,"sustained_semantic_docs_per_sec":$sustained%.1f,"docs":$nDocs,"extract_child":$childOk,"parent_heap_mb":$heapMaxMb,"suite_loadavg":[$loadBefore%.2f,$loadAfter%.2f],"extract_detail":$extractJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed_queries":${failed.mkString("[", ",", "]")},"failed_query_count":${failed.size},"sf":"$sfDir","extraction_sec":$chunkSec%.3f,"extraction_docs_per_sec":$docsPerSec%.1f,"semantic_extraction_sec":$semSec%.3f,"semantic_docs_per_sec":$semDocsPerSec%.1f,"sustained_semantic_docs_per_sec":$sustained%.1f,"docs":$nDocs,"extract_child":$childOk,"parent_heap_mb":$heapMaxMb,"suite_loadavg":[$loadBefore%.2f,$loadAfter%.2f],"extract_detail":$extractJson}"""
     println(line)
     // the driver's stdout capture has truncated the line's head in past
     // rounds ("parsed": null) — also persist the identical JSON to a file

@@ -46,6 +46,16 @@ object QueryScaling {
   /** doc_id offset between replicas: LCM of every operator mod-split. */
   private val ReplicaOffset = 20370L
 
+  /** The F replicas are independent copies only if F ≤ 26 (two replicas
+    * would otherwise share a rotation) and every doc_id lies in
+    * [0, ReplicaOffset) (replica r's ids would otherwise run into r+1's). */
+  private[graft] def checkFactor(factor: Int): Unit = require(factor >= 1 && factor <= 26,
+    s"SPARK_GRAFT_SCALE must be in 1..26 (one Caesar rotation per replica), got $factor")
+
+  private[graft] def checkIds(minId: Long, maxId: Long): Unit =
+    require(minId >= 0 && maxId < ReplicaOffset,
+      s"doc_id must lie in [0, $ReplicaOffset) for disjoint replicas, got [$minId, $maxId]")
+
   private def rotated(r: Int): String = {
     val a = "abcdefghijklmnopqrstuvwxyz"
     val k = r % 26
@@ -56,6 +66,7 @@ object QueryScaling {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
+    checkFactor(factor)
     val reps1 = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val repsF = math.max(2, reps1 - 1)
     val names = sys.env.get("SPARK_GRAFT_QUERIES")
@@ -64,6 +75,8 @@ object QueryScaling {
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // ---- stage the replicated corpus ----
+    val ids = spark.read.parquet(s"$sfDir/documents.parquet").agg(min("doc_id"), max("doc_id")).head()
+    checkIds(ids.getLong(0), ids.getLong(1))
     val scaled = s"/tmp/graft_qscale_x$factor"
     val scaledPath = java.nio.file.Paths.get(scaled)
     if (java.nio.file.Files.exists(scaledPath)) {

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.model.Doc
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.model.{Doc, Lineage}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable, idempotent extraction runs — Iceberg MERGE-on-doc_id semantics
@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   * rewritten wholesale.
   *
   * Each group is one routed extraction of its slice
-  * (`ExtractJob.extractWithLineageCached`): normal docs stay in the slice's
-  * input partitions, only giants are exchanged, the kernel output is
-  * persisted once and feeds both the spans write and the map-side lineage
-  * summary — no shuffle of normal docs and no aggregation exchange.
+  * (`ExtractJob.extractWithLineage`): normal docs stay in the slice's input
+  * partitions, only giants are exchanged, and the kernel runs once, inside
+  * the spans write, counting the lineage that the commit then writes from
+  * the driver — no persisted stage, no second pass, no aggregation exchange.
   *
   * At cluster scale each group is itself a full distributed job over 1/G of
   * the input, so checkpoint granularity trades straggler re-work (small G)
@@ -42,6 +42,9 @@ object Checkpoint {
 
   def groupOf(numGroups: Int) = pmod(xxhash64(col("doc_id")), lit(numGroups.toLong))
 
+  /** Declared, not inferred (no schema job): lineage files are our own output. */
+  val lineageSchema = Encoders.product[Lineage].schema.add("grp", "bigint")
+
   /** The writer seam (SURVEY §7.1): Iceberg-style per-group commit. A real
     * Iceberg catalog slots in by implementing `overwriteGroup` as
     * MERGE/overwrite-partition and `commitGroup` as the snapshot commit that
@@ -49,7 +52,7 @@ object Checkpoint {
     * The contract `runResumable` relies on:
     *  - `overwriteGroup` is idempotent and all-or-nothing per group (a
     *    killed write leaves nothing visible; a re-run replaces, never
-    *    appends);
+    *    appends), and consumes every row of `spans` (lineage counts them);
     *  - `commitGroup` runs strictly AFTER the group's data is durable — its
     *    lineage append IS the commit marker;
     *  - `doneGroups` returns exactly the groups whose `commitGroup` landed.
@@ -70,7 +73,7 @@ object Checkpoint {
       val path = new org.apache.hadoop.fs.Path(lineageDir(outDir))
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(path)) Set.empty
-      else spark.read.parquet(lineageDir(outDir))
+      else readLineage(spark, outDir)
         .select("grp").distinct().collect().map(_.getLong(0)).toSet
     }
 
@@ -150,19 +153,13 @@ object Checkpoint {
 
     for (g <- todo) {
       val slice = withGrp.filter($"grp" === g).select($"doc_id", $"spans").as[Doc]
-      // Cached tagged stage: the spans write and the lineage write are two
-      // actions over the same kernel output — without the persist each group
-      // would be extracted twice.
-      val (spans, lineage, unpersist) = ExtractJob.extractWithLineageCached(slice, cfg)
-      writer.overwriteGroup(g, spans.toDF())
+      val (spans, lineage) = ExtractJob.extractWithLineage(slice, cfg)
+      writer.overwriteGroup(g, spans.toDF()) // drains the kernel, counting lineage()
       // The lineage append IS the commit marker, so it must be non-empty even
       // for a zero-doc group: a synthetic partition_id=-1 marker row makes
       // empty groups durably "done" (otherwise every resume re-runs them).
-      val marker = spark.createDataset(Seq(
-        graft.model.Lineage(-1, 0L, 0L, 0L, "marker")))
-      // one lineage file per group, not one per kernel partition
-      writer.commitGroup(g, lineage.union(marker).coalesce(1).toDF())
-      unpersist()
+      val rows = lineage() :+ Lineage(-1, 0L, 0L, 0L, "marker")
+      writer.commitGroup(g, rows.toDS().coalesce(1).toDF()) // one file per group
     }
     todo.size
   }
@@ -171,5 +168,5 @@ object Checkpoint {
     spark.read.parquet(spansDir(outDir)).drop("grp")
 
   def readLineage(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(lineageDir(outDir))
+    spark.read.schema(lineageSchema).parquet(lineageDir(outDir))
 }

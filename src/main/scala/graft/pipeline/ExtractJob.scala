@@ -5,6 +5,7 @@ import graft.model.{Doc, Lineage}
 import graft.sources.DocSynth
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 
 /** The main extraction pipeline (SURVEY.md §3.1's Spark lifecycle):
   *
@@ -17,7 +18,8 @@ import org.apache.spark.sql.functions._
   *    north_rule skew case, ~1% of bytes) get a hash exchange on doc_id, so
   *    no task serializes a run of giants and normal rows are never shuffled.
   *  - No collect(), no driver-side loops; lineage is one summary row per
-  *    partition, computed map-side, and only those rows reach the driver.
+  *    partition, counted by the kernel task itself, and only those rows
+  *    reach the driver (as accumulator updates of the same job).
   *  - Determinism: output spans are a pure function of the input row, so
   *    task retries and job re-runs emit identical bytes — the precondition
   *    for MERGE-on-doc_id resume (Checkpoint).
@@ -153,57 +155,57 @@ object ExtractJob {
       .mapPartitions(_.map { case (id, t) => Extract.extractDoc(DocSynth.synthDoc(id, t), mode) })
   }
 
-  /** One-pass extraction that also yields per-partition lineage rows.
-    * Returns (spans, lineage) — kernel failures are counted, not thrown: a
-    * single malformed doc must not abort a 10^12-doc job; reference aborts
-    * on first error at ingest_documents.py:94, which is exactly the weakness
-    * the north_rule fixes.
+  /** Extraction that counts per-partition lineage in the same pass: after
+    * an action over `spans`, `lineage()` holds one row per partition that
+    * the action drained (a partition read only in part, as under `limit`,
+    * reports nothing). Kernel failures are counted, not thrown: a single
+    * malformed doc must not abort a 10^12-doc job; reference aborts on
+    * first error at ingest_documents.py:94, the weakness the north_rule fixes.
+    *
+    * Rows reach the driver through an accumulator made per call, keyed by
+    * the partition id tagged right after the routed union, so the normals'
+    * and giants' ids never collide and no coalescing by a consumer can
+    * change them; a second action replaces the rows instead of doubling
+    * them. The kernel sits in the action's result stage, above both
+    * exchanges (plan-gated in `PlanQualitySpec`), where Spark applies each
+    * partition's update once.
     */
   def extractWithLineage(docs: Dataset[Doc], cfg: Config = Config())
-      : (Dataset[Doc], Dataset[Lineage]) = {
-    val (spans, lineage, _) = extractWithLineageCached(docs, cfg, cache = false)
-    (spans, lineage)
-  }
-
-  /** Like extractWithLineage, but persists the routed kernel stage so that a
-    * caller running TWO actions (spans write + lineage write, as Checkpoint
-    * does per group) executes the kernel ONCE, not twice. The returned
-    * thunk unpersists — call it after the second action commits.
-    *
-    * Lineage is a `mapPartitions` summary of that stage: one row per
-    * non-empty partition, no shuffle. Each row's partition id is tagged
-    * right after the routed union (`spark_partition_id()` is the index of
-    * that operator's own partition), so the normals' and the giants' ids
-    * never collide and no coalescing by a consumer can change them.
-    */
-  def extractWithLineageCached(docs: Dataset[Doc], cfg: Config = Config(), cache: Boolean = true)
-      : (Dataset[Doc], Dataset[Lineage], () => Unit) = {
+      : (Dataset[Doc], () => Seq[Lineage]) = {
     import docs.sparkSession.implicits._
     val mode = cfg.mode
-    // (doc, partition_id, failed) — a failing doc yields an empty doc + flag.
-    val tagged0 = routeDocs(docs, cfg)
+    val rows = new LineageRows
+    docs.sparkSession.sparkContext.register(rows)
+    val spans = routeDocs(docs, cfg)
       .select(struct(col("doc_id"), col("spans")), spark_partition_id())
       .as[(Doc, Int)]
-      .map { case (d, pid) =>
-        try (Extract.extractDoc(d, mode), pid, false)
-        catch { case scala.util.control.NonFatal(_) => (Doc(d.doc_id, Nil), pid, true) }
+      .mapPartitions { in =>
+        var pid = -1
+        var parsed, emitted, failures = 0L
+        in.map { case (d, p) =>
+          pid = p; parsed += 1
+          // a failing doc yields an empty doc and counts as a failure
+          val out =
+            try Extract.extractDoc(d, mode)
+            catch { case scala.util.control.NonFatal(_) => failures += 1; Doc(d.doc_id, Nil) }
+          emitted += out.spans.size
+          out
+        } ++ { // `++` is lazy: this runs once, when the input is exhausted
+          if (parsed > 0) rows.add(Lineage(pid, parsed, emitted, failures, "complete"))
+          Iterator.empty
+        }
       }
-    val tagged =
-      if (cache) tagged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tagged0
-    val spans = tagged.map(_._1)
-    val lineage = tagged.mapPartitions { it =>
-      var pid = -1
-      var parsed, emitted, failures = 0L
-      it.foreach { case (d, p, failed) =>
-        pid = p
-        parsed += 1
-        emitted += d.spans.size
-        if (failed) failures += 1
-      }
-      if (parsed == 0) Iterator.empty
-      else Iterator.single(Lineage(pid, parsed, emitted, failures, "complete"))
-    }
-    (spans, lineage, () => { tagged.unpersist(); () })
+    (spans, () => rows.value)
+  }
+
+  /** Lineage rows keyed by partition_id; a merged row replaces the held one. */
+  private final class LineageRows extends AccumulatorV2[Lineage, Seq[Lineage]] {
+    private val byPart = scala.collection.mutable.Map.empty[Int, Lineage]
+    def isZero: Boolean = synchronized(byPart.isEmpty)
+    def copy(): LineageRows = synchronized { val c = new LineageRows; c.byPart ++= byPart; c }
+    def reset(): Unit = synchronized(byPart.clear())
+    def add(l: Lineage): Unit = synchronized(byPart(l.partition_id) = l)
+    def merge(other: AccumulatorV2[Lineage, Seq[Lineage]]): Unit = other.value.foreach(add)
+    def value: Seq[Lineage] = synchronized(byPart.values.toSeq.sortBy(_.partition_id))
   }
 }

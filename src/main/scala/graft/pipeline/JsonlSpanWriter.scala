@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import graft.model.{Doc, Lineage}
+import graft.model.Doc
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Second durable [[Checkpoint.SpanWriter]] implementation: JSON-Lines
   * storage with the writer providing its own per-group atomicity.
@@ -36,15 +36,12 @@ import org.apache.spark.sql.types.{LongType, StructType}
   */
 final class JsonlSpanWriter(spark: SparkSession, outDir: String) extends Checkpoint.SpanWriter {
 
-  private val lineageSchema: StructType =
-    Encoders.product[Lineage].schema.add("grp", LongType)
-
   private def fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   override def doneGroups(): Set[Long] = {
     val dir = new Path(Checkpoint.lineageDir(outDir))
     if (!fs.exists(dir)) Set.empty
-    else spark.read.schema(lineageSchema).json(dir.toString)
+    else spark.read.schema(Checkpoint.lineageSchema).json(dir.toString)
       .select("grp").distinct().collect().map(_.getLong(0)).toSet
   }
 
@@ -76,8 +73,6 @@ object JsonlSpanWriter {
     spark.read.schema(Encoders.product[Doc].schema.add("grp", LongType))
       .json(Checkpoint.spansDir(outDir)).drop("grp")
 
-  def readLineage(spark: SparkSession, outDir: String): DataFrame = {
-    val schema = Encoders.product[Lineage].schema.add("grp", LongType)
-    spark.read.schema(schema).json(Checkpoint.lineageDir(outDir))
-  }
+  def readLineage(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(Checkpoint.lineageSchema).json(Checkpoint.lineageDir(outDir))
 }

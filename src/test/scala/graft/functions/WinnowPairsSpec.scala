@@ -131,4 +131,21 @@ class WinnowPairsSpec extends SparkTestBase {
     val e3 = intercept[Exception](df.select(expr("winnow_pairs(hs, 0)")).collect())
     assert(e3.getMessage != null)
   }
+
+  test("integer arguments: any foldable integral is accepted, anything else fails naming the function") {
+    GraftFunctions.ensure(spark)
+    val df = Seq(Tuple1(Array(5L, 3L, 9L, 1L, 7L, 2L, 8L)), Tuple1(Array(4L, 4L))).toDF("hs")
+    val want = df.select(expr("winnow_pairs(hs, 4)")).collect().toSeq
+    assert(want.nonEmpty)
+    for (arg <- Seq("4L", "4S", "4Y", "CAST(4 AS SMALLINT)", "CAST('4' AS INT)", "2 + 2"))
+      assert(df.select(expr(s"winnow_pairs(hs, $arg)")).collect().toSeq == want, arg)
+    for (fn <- Seq("simhash_bits(hs, %s)", "minhash_sigs(transform(hs, h -> string(h)), %s)"))
+      assert(df.select(expr(fn.format("8L"))).collect().toSeq ==
+        df.select(expr(fn.format("8"))).collect().toSeq, fn)
+    for (bad <- Seq("size(hs)", "'4'", "4.0", "CAST(NULL AS INT)", "5000000000L")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(expr(s"winnow_pairs(hs, $bad)")).collect())
+      assert(e.getMessage.contains("winnow_pairs"), s"$bad: ${e.getMessage}")
+    }
+  }
 }

@@ -176,25 +176,36 @@ class PlanQualitySpec extends SparkTestBase {
     assert(p.contains("GreaterThan(n_chars,"), p.take(4000))
   }
 
-  /** The deployed per-group shape (Checkpoint → extractWithLineageCached):
+  /** Every node of an executed plan, through adaptive stages and cached
+    * relations, each with whether it runs below an exchange (in an earlier
+    * stage than the plan's result stage). */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan, shuffled: Boolean = false)
+      : Seq[(org.apache.spark.sql.execution.SparkPlan, Boolean)] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    p match {
+      case c: org.apache.spark.sql.execution.CommandResultExec => nodes(c.commandPhysicalPlan, shuffled)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, shuffled)
+      case q: QueryStageExec => nodes(q.plan, shuffled) // a shuffle stage's plan is its exchange
+      case r: ReusedExchangeExec => (r, shuffled) +: nodes(r.child, true)
+      case e: Exchange => (e, shuffled) +: e.children.flatMap(nodes(_, true))
+      case m: InMemoryTableScanExec => (m, shuffled) +: nodes(m.relation.cachedPlan, true)
+      case other => (other, shuffled) +: other.children.flatMap(nodes(_, shuffled))
+    }
+  }
+
+  /** The deployed per-group shape (Checkpoint → extractWithLineage):
     * normal docs keep their k input partitions; the one hash exchange is the
     * giants branch's, at default parallelism — never the session's shuffle
     * partition count (200 under ExtractMain).
     */
-  test("extractWithLineageCached: k + defaultParallelism partitions, one exchange, giants only") {
+  test("extractWithLineage: k + defaultParallelism partitions, one exchange, giants only") {
     import org.apache.spark.sql.catalyst.expressions.{GreaterThan, Literal}
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import spark.implicits._
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "200")
@@ -202,24 +213,64 @@ class PlanQualitySpec extends SparkTestBase {
       val k = 3
       val in = graft.sources.DocSynth.docs(spark, sfDir).collect().toSeq
       val docs = spark.createDataset(spark.sparkContext.parallelize(in, k))
-      val (spans, _, unpersist) = graft.pipeline.ExtractJob.extractWithLineageCached(docs)
-      try {
-        val plan = spans.queryExecution.executedPlan
-        val exchanges = nodes(plan).collect { case e: ShuffleExchangeExec => e }
-        assert(exchanges.size == 1, plan.toString.take(4000))
-        assert(exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning], plan.toString.take(4000))
-        val giantsFilter = nodes(exchanges.head.child).exists {
-          case f: FilterExec => f.condition.exists {
-            case GreaterThan(_, Literal(v, _)) => v == 1024L
-            case _ => false
-          }
+      val (spans, _) = graft.pipeline.ExtractJob.extractWithLineage(docs)
+      val plan = spans.queryExecution.executedPlan
+      val exchanges = nodes(plan).map(_._1).collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, plan.toString.take(4000))
+      assert(exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning], plan.toString.take(4000))
+      val giantsFilter = nodes(exchanges.head.child).map(_._1).exists {
+        case f: FilterExec => f.condition.exists {
+          case GreaterThan(_, Literal(v, _)) => v == 1024L
           case _ => false
         }
-        assert(giantsFilter, plan.toString.take(4000))
-        val parts = spans.rdd.getNumPartitions
-        assert(parts <= k + spark.sparkContext.defaultParallelism, s"$parts output partitions")
-      } finally unpersist()
+        case _ => false
+      }
+      assert(giantsFilter, plan.toString.take(4000))
+      val parts = spans.rdd.getNumPartitions
+      assert(parts <= k + spark.sparkContext.defaultParallelism, s"$parts output partitions")
     } finally spark.conf.set(key, prev)
+  }
+
+  /** One kernel pass per deployed group: every query one `runResumable`
+    * group executes is captured, and the kernel's `MapPartitions` must run
+    * in exactly one of them, in that query's result stage (above every
+    * exchange, so Spark applies its lineage update once per partition), and
+    * no query may read a persisted stage.
+    */
+  test("runResumable: one kernel pass per group, in the write's result stage, nothing persisted") {
+    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sentinel = "plan_gate_sentinel"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    @volatile var drained = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(sentinel)) drained = true
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    val docs = graft.sources.DocSynth.docs(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-gate").toString
+    spark.listenerManager.register(listener)
+    try {
+      assert(graft.pipeline.Checkpoint.runResumable(docs, dir, numGroups = 2, maxGroups = 1) == 1)
+      // listener events arrive in order on one bus: once the sentinel's has
+      // arrived, so has every event of the group
+      spark.range(1).selectExpr(s"id AS $sentinel").collect()
+      eventually(timeout(30.seconds))(assert(drained))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    val shown = all.map(_.toString.take(3000)).mkString("\n----\n")
+    assert(all.size >= 2, shown) // the spans write and the lineage commit
+    assert(!all.exists(p => nodes(p).exists(_._1.isInstanceOf[InMemoryTableScanExec])), shown)
+    val kernels = all.map(p => nodes(p).collect { case (_: MapPartitionsExec, below) => below })
+    assert(kernels.count(_.nonEmpty) == 1, shown)
+    assert(kernels.flatten == Seq(false), shown)
   }
 
   test("q_asof_join: one-pass merge - single user_id exchange, no join node") {

@@ -66,11 +66,37 @@ class PipelineSpec extends SparkTestBase {
   test("lineage: docs_parsed sums to input count, zero failures, spans consistent") {
     val docs = DocSynth.docs(spark, sfDir)
     val (spans, lineage) = ExtractJob.extractWithLineage(docs)
-    val lin = lineage.collect()
+    val totalSpans = spans.collect().map(_.spans.size.toLong).sum
+    val lin = lineage()
     assert(lin.map(_.docs_parsed).sum == 500)
     assert(lin.map(_.parse_failures).sum == 0)
-    val totalSpans = spans.collect().map(_.spans.size.toLong).sum
     assert(lin.map(_.spans_emitted).sum == totalSpans)
+  }
+
+  test("lineage: a second action over the same spans reports the same rows, not twice") {
+    val in = DocSynth.docs(spark, sfDir).collect().toSeq
+    val docs = spark.createDataset(spark.sparkContext.parallelize(in, 3))
+    val (spans, lineage) = ExtractJob.extractWithLineage(docs)
+    spans.collect()
+    val first = lineage()
+    spans.toDF().write.format("noop").mode("overwrite").save()
+    val second = lineage()
+    assert(first.nonEmpty && second == first)
+    assert(second.map(_.docs_parsed).sum == in.length)
+  }
+
+  test("lineage: a partition an action reads only in part reports nothing") {
+    val in = DocSynth.docs(spark, sfDir).collect().toSeq
+    val docs = spark.createDataset(spark.sparkContext.parallelize(in, 3)) // ~167 docs each
+    val (spans, lineage) = ExtractJob.extractWithLineage(docs)
+    assert(spans.limit(1).collect().length == 1) // reads one row of partition 0
+    val partial = lineage()
+    spans.collect()
+    val full = lineage()
+    assert(full.map(_.docs_parsed).sum == in.length)
+    assert(full.exists(_.partition_id == 0))
+    assert(!partial.exists(_.partition_id == 0), partial)
+    assert(partial.forall(full.contains), partial) // a row is only ever a whole partition's
   }
 
   test("skew: giant docs spread across partitions (targeted salt exchange)") {
@@ -290,11 +316,10 @@ class PipelineSpec extends SparkTestBase {
     for (k <- Seq(1, 3, 8); t <- Seq(0L, 1024L, Long.MaxValue)) {
       val docs = spark.createDataset(spark.sparkContext.parallelize(in, k))
       val cfg = ExtractJob.Config(giantMinChars = t)
-      val (spans, lineage, unpersist) = ExtractJob.extractWithLineageCached(docs, cfg)
+      val (spans, lineage) = ExtractJob.extractWithLineage(docs, cfg)
       val out = spans.collect()
-      val lin = lineage.collect()
+      val lin = lineage()
       val parts = spans.toDF().select(spark_partition_id()).distinct().count()
-      unpersist()
       val at = s"k=$k giantMinChars=$t"
       assert(out.length == in.length && out.forall(d => want(d.doc_id) == d), at)
       assert(lin.map(_.docs_parsed).sum == in.length, at)
@@ -311,12 +336,11 @@ class PipelineSpec extends SparkTestBase {
     assert(scala.util.Try(graft.kernel.Extract.extractDoc(bad)).isFailure)
     val in = bad +: DocSynth.docs(spark, sfDir).limit(20).collect().toSeq
     val docs = spark.createDataset(spark.sparkContext.parallelize(in, 3))
-    val (spans, lineage, unpersist) = ExtractJob.extractWithLineageCached(docs)
+    val (spans, lineage) = ExtractJob.extractWithLineage(docs)
     assert(spans.collect().find(_.doc_id == "bad").contains(Doc("bad", Nil)))
+    val lin = lineage()
     val badPart = spans.toDF().where(col("doc_id") === "bad")
       .select(spark_partition_id()).head().getInt(0)
-    val lin = lineage.collect()
-    unpersist()
     assert(lin.map(_.docs_parsed).sum == in.length)
     assert(lin.filter(_.parse_failures > 0).map(l => l.partition_id -> l.parse_failures).toSeq ==
       Seq(badPart -> 1L))
